@@ -19,10 +19,9 @@ shuffle per input table:
        extracted(doc header, line_items[], errors[], spans_out[]) -> sinks
 
 Boundary shape: each document crosses the JVM<->Python Arrow boundary as ONE
-row (doc_id, words:array<struct>) — doc_id (42% of the flat shape's IPC
-bytes, measured) ships once per doc instead of once per word, and the
-map-side partial collect_list compresses the shuffle the same way. The
-legacy one-row-per-word shape remains behind HORUS_SPARK_BOUNDARY=flat.
+row (doc_id, words:array<struct>) — doc_id (42% of a one-row-per-word
+shape's IPC bytes, measured) ships once per doc instead of once per word,
+and the map-side partial collect_list compresses the shuffle the same way.
 
 Skew control: hashing on doc_id spreads media-heavy documents uniformly
 (per-doc cost is bounded: ~250 words normally, hard kernel cap
@@ -61,7 +60,6 @@ FIELDS_SCHEMA = (
     "field_line_ids array<int>, recognizer_status string, "
     "recognizer_errors array<string>, time_to_shred_ms double"
 )
-FIELDS_MAP_SCHEMA = FIELDS_SCHEMA + ", fields map<string,string>"
 
 _HEADER_KEYS = [
     ("order_number", "OrderNO"), ("order_date", "OrderDate"),
@@ -70,31 +68,11 @@ _HEADER_KEYS = [
     ("shipping_total", "Shipping"), ("grand_total", "TotalIncVAT"),
     ("post_code", "PostCode"),
 ]
-
-
-def _raw_views(fields: dict) -> tuple[dict, list]:
-    """fields map -> (header_raw, prefix-terminated lines_raw); mirrors the
-    reference's presence + break semantics (ProcessingEngine.cs:15-35,
-    HorusProcessingEngine.cs:49-85)."""
-    header = {col: fields.get(key) for col, key in _HEADER_KEYS}
-    lines = []
-    for i in range(1, 50):
-        nn = f"{i:02d}"
-        if not (f"Unit{nn}" in fields or f"Net{nn}" in fields or f"Drug{nn}" in fields):
-            break
-        lines.append(
-            {
-                "drug": fields.get(f"Drug{nn}"),
-                "qty": fields.get(f"Qty{nn}"),
-                "unit": fields.get(f"Unit{nn}"),
-                "vat": fields.get(f"Vat{nn}"),
-                "disc": fields.get(f"Disc{nn}"),
-                "taxable": fields.get(f"Taxable{nn}"),
-                "net": fields.get(f"Net{nn}"),
-            }
-        )
-    return header, lines
-
+_LINE_COLS = ("drug", "qty", "unit", "vat", "disc", "taxable", "net")
+_LINE_KEY_PREFIX = {
+    "drug": "Drug", "qty": "Qty", "unit": "Unit", "vat": "Vat",
+    "disc": "Disc", "taxable": "Taxable", "net": "Net",
+}
 
 # Skew/robustness guard: a pathological media-heavy document (generator
 # bound is ~250 words; real corpora can carry megaword OCR blobs) is
@@ -102,42 +80,38 @@ def _raw_views(fields: dict) -> tuple[dict, list]:
 # kernel — bounding both the per-doc compute and the pandas working set a
 # single doc_id hash key can pin to one partition. The reference bounds
 # documents the same way (50-line cap, content-type whitelist).
-MAX_DOC_WORDS = int(_os.environ.get("HORUS_MAX_DOC_WORDS", "20000"))
+MAX_DOC_WORDS = 20000
 
 
 def _extract_core(
     pdf: pd.DataFrame, configs: dict | None = None
 ) -> tuple[list, list, dict, list, list]:
-    """One bucket of OCR words (many docs) -> (doc_ids, fields dicts,
-    doc_id->sorted field line ids). L1 runs vectorized over the WHOLE
-    batch; grid/fields per doc (bounded: <=250 words/doc normally, hard
-    cap MAX_DOC_WORDS). Field->OCR-line membership resolves through ONE
-    vectorized merge at the end (no per-fragment Python tuples).
-    `configs` is the (broadcast-small) fmt->extraction-config dict from
-    the model registry; None = built-in FORMAT_CONFIGS.
+    """One doc-contiguous chunk of OCR words (many docs) -> (doc_ids,
+    fields dicts, doc_id->sorted field line ids, per-doc (status, errors),
+    per-doc wall ms). L1 runs vectorized over the WHOLE chunk; grid/fields
+    per doc (bounded: <=250 words/doc normally, hard cap MAX_DOC_WORDS).
+    Field->OCR-line membership resolves through ONE vectorized merge at the
+    end (no per-fragment Python tuples). `configs` is the (broadcast-small)
+    fmt->extraction-config dict from the model registry; None = built-in
+    FORMAT_CONFIGS.
 
     Per-document isolation (reference DocumentProcessor.cs:101-106: one
     failing document never stops the others): a document whose layout
     analysis raises yields an EMPTY fields map — the shredder then emits
     the full PRE000x error-row channel for it, exactly like a document
     the recognizer returned nothing for — and every other document in the
-    batch is unaffected.
+    chunk is unaffected.
 
-    Also returns per-doc (status, errors) — the reference's
-    RecognizerStatus/RecognizerErrors (Models/Document.cs:20-105) — and
-    per-doc wall milliseconds (TimeToShred,
-    HorusProcessingEngine.cs:15-16,87-88): the per-doc loop is timed
-    directly; the batch-vectorized prelude (L1 clustering) and epilogue
-    (field-line merge) are amortized evenly across the batch's docs."""
+    The (status, errors) pair is the reference's
+    RecognizerStatus/RecognizerErrors (Models/Document.cs:20-105); the wall
+    ms is its TimeToShred (HorusProcessingEngine.cs:15-16,87-88): the
+    per-doc loop is timed directly; the chunk-vectorized prelude (L1
+    clustering) and epilogue (field-line merge) are amortized evenly
+    across the chunk's docs."""
     import time as _time
 
-    # A/B gate for the per-doc timer (verdict-r3 ask #9): the idle-host
-    # A/B at sf0.1 bench conditions measured ON == OFF within noise (see
-    # BENCH.md round-4 addendum), so it defaults ON; the knob exists so
-    # the measurement stays reproducible.
-    timing = _os.environ.get("HORUS_SPARK_TIME_DOCS", "1") != "0"
-    t_batch0 = _time.perf_counter_ns() if timing else 0
-    if len(pdf) > MAX_DOC_WORDS:  # a smaller batch cannot hold a heavy doc
+    t_batch0 = _time.perf_counter_ns()
+    if len(pdf) > MAX_DOC_WORDS:  # a smaller chunk cannot hold a heavy doc
         counts = pdf["doc_id"].value_counts()
         heavy = counts[counts > MAX_DOC_WORDS]
     else:
@@ -175,7 +149,7 @@ def _extract_core(
         doc_id = doc_ids[s]
         texts = texts_all[s:e]
         fx0, fy, fx1 = x0_all[s:e], y0_all[s:e], x1_all[s:e]
-        t0 = _time.perf_counter_ns() if timing else 0
+        t0 = _time.perf_counter_ns()
         try:
             if not finite_all[s:e].all():
                 raise ValueError("non-finite bbox geometry in OCR words")
@@ -190,7 +164,7 @@ def _extract_core(
             # WHY it failed is recorded — the reference's RecognizerErrors.
             fields, used = {}, set()
             status = ("failed", [f"{type(exc).__name__}: {exc}"])
-        out_ns.append(_time.perf_counter_ns() - t0 if timing else 0)
+        out_ns.append(_time.perf_counter_ns() - t0)
         out_ids.append(doc_id)
         out_fields.append(fields)
         out_status.append(status)
@@ -212,63 +186,19 @@ def _extract_core(
         flid_map = {}
     # amortize everything outside the per-doc loop (prelude + merge) evenly
     n_docs = len(out_ids)
-    if timing:
-        overhead = max(_time.perf_counter_ns() - t_batch0 - sum(out_ns), 0)
-        share = overhead / n_docs if n_docs else 0.0
-        out_ms = [(ns + share) / 1e6 for ns in out_ns]
-    else:
-        out_ms = [0.0] * n_docs
+    overhead = max(_time.perf_counter_ns() - t_batch0 - sum(out_ns), 0)
+    share = overhead / n_docs if n_docs else 0.0
+    out_ms = [(ns + share) / 1e6 for ns in out_ns]
     return out_ids, out_fields, flid_map, out_status, out_ms
 
 
-def _extract_batch(
-    pdf: pd.DataFrame,
-    configs: dict | None = None,
-    with_fields_map: bool = False,
-) -> pd.DataFrame:
-    """pandas-output assembly over _extract_core (mapInPandas path and
-    tests; the hot path is _extract_batch_arrow)."""
-    if len(pdf) == 0:
-        # empty frame must still match the declared output shape
-        # (FIELDS_SCHEMA [+ fields]) — an earlier guard emitted a
-        # 3-column stub that would fail Arrow serialization under
-        # mapInPandas instead of producing a well-typed empty batch
-        cols = [
-            "doc_id", "header_raw", "lines_raw", "field_line_ids",
-            "recognizer_status", "recognizer_errors", "time_to_shred_ms",
-        ] + (["fields"] if with_fields_map else [])
-        return pd.DataFrame({c: [] for c in cols})
-    out_ids, out_fields, flid_map, out_status, out_ms = _extract_core(pdf, configs)
-    raws = [_raw_views(fd) for fd in out_fields]
-    out = pd.DataFrame(
-        {
-            "doc_id": out_ids,
-            "header_raw": [r[0] for r in raws],
-            "lines_raw": [r[1] for r in raws],
-        }
-    )
-    out["field_line_ids"] = [flid_map.get(d, []) for d in out_ids]
-    out["recognizer_status"] = [s[0] for s in out_status]
-    out["recognizer_errors"] = [s[1] for s in out_status]
-    out["time_to_shred_ms"] = out_ms
-    if with_fields_map:
-        out["fields"] = out_fields
-    return out
-
-
-_LINE_COLS = ("drug", "qty", "unit", "vat", "disc", "taxable", "net")
-_LINE_KEY_PREFIX = {
-    "drug": "Drug", "qty": "Qty", "unit": "Unit", "vat": "Vat",
-    "disc": "Disc", "taxable": "Taxable", "net": "Net",
-}
-
-
 def _extract_batch_arrow(pdf: pd.DataFrame, configs: dict | None = None):
-    """Hot-path assembly: build the output RecordBatch columnar-first —
-    flat value/offset lists straight into Arrow arrays. The previous
-    from_pandas path materialized ~1 header dict + ~9 line dicts per doc
-    and had pyarrow re-infer them per row; per-object allocation was the
-    dominant memory-allocator traffic at 32-way parallelism."""
+    """Kernel output assembly: build the RecordBatch columnar-first — flat
+    value/offset lists straight into Arrow arrays, no per-doc header or
+    line dicts for pyarrow to re-infer. Line items follow the reference's
+    presence + break semantics: line NN exists iff any of UnitNN, NetNN,
+    DrugNN was extracted, and the first absent NN ends the list
+    (ProcessingEngine.cs:15-35, HorusProcessingEngine.cs:49-85)."""
     import pyarrow as pa
 
     out_ids, out_fields, flid_map, out_status, out_ms = _extract_core(pdf, configs)
@@ -332,10 +262,8 @@ def _extract_batch_arrow(pdf: pd.DataFrame, configs: dict | None = None):
 # env-overridable for bench sweeps)
 _KERNEL_CHUNK_ROWS = int(_os.environ.get("HORUS_KERNEL_CHUNK_ROWS", "65536"))
 
-# Arrow output schema mirroring FIELDS_SCHEMA (mapInArrow hands us raw
-# RecordBatches both ways; doing our own pandas conversion with
-# split_blocks/self_destruct costs ~5% of what the generic pandas-UDF
-# serializer spends per column)
+# Arrow twin of FIELDS_SCHEMA: mapInArrow hands the kernel raw RecordBatches
+# both ways, so it builds its output against this schema directly
 _ARROW_FIELDS_SCHEMA = None
 
 
@@ -344,12 +272,8 @@ def _arrow_fields_schema():
     if _ARROW_FIELDS_SCHEMA is None:
         import pyarrow as pa
 
-        header_t = pa.struct(
-            [(c, pa.string()) for c, _ in _HEADER_KEYS]
-        )
-        line_t = pa.struct(
-            [(c, pa.string()) for c in ("drug", "qty", "unit", "vat", "disc", "taxable", "net")]
-        )
+        header_t = pa.struct([(c, pa.string()) for c, _ in _HEADER_KEYS])
+        line_t = pa.struct([(c, pa.string()) for c in _LINE_COLS])
         _ARROW_FIELDS_SCHEMA = pa.schema(
             [
                 ("doc_id", pa.string()),
@@ -364,49 +288,16 @@ def _arrow_fields_schema():
     return _ARROW_FIELDS_SCHEMA
 
 
-def _extract_iter_arrow(batches, configs: dict | None = None):
-    """mapInArrow kernel: same semantics as _extract_iter, with hand-rolled
-    Arrow<->pandas conversion on both edges and columnar-first output
-    assembly (_extract_batch_arrow). Doc grouping uses factorize+argsort on
-    integer codes — O(n) hashing instead of an O(n log n) string mergesort
-    (any order that keeps each doc contiguous is valid)."""
-    import numpy as np
-    import pyarrow as pa
-
-    batches = list(batches)
-    if not batches:
-        return
-    tbl = pa.Table.from_batches(batches)
-    del batches
-    pdf = tbl.to_pandas(split_blocks=True, self_destruct=True)
-    del tbl
-    codes, _ = pd.factorize(pdf["doc_id"], sort=False)
-    order = np.argsort(codes, kind="stable")
-    pdf = pdf.take(order)
-    pdf.reset_index(drop=True, inplace=True)
-    ids = codes[order]
-    n = len(pdf)
-    s = 0
-    while s < n:
-        e = min(s + _KERNEL_CHUNK_ROWS, n)
-        while e < n and ids[e] == ids[e - 1]:
-            e += 1
-        yield _extract_batch_arrow(pdf.iloc[s:e], configs)
-        s = e
-
-
 def _extract_iter_arrow_grouped(batches, configs: dict | None = None):
-    """mapInArrow kernel over the GROUPED boundary shape
+    """mapInArrow kernel over the grouped boundary shape
     (doc_id, words:array<struct<page,line_id,word_id,text,x0,y0,x1,y1>>).
 
     Each input row is one whole document, so doc contiguity is free: no
-    factorize/argsort/take over the word rows (the flat kernel's prelude
-    rematerialized every column of ~10M rows per 100k docs). The list
-    column flattens zero-copy into per-word arrays; doc_id expands to a
-    per-word column as an object-pointer repeat (pointers to the ~n_docs
-    shared strings, not string copies). Chunking walks doc boundaries via
-    the cumulative word counts — same ~64k-word doc-aligned chunks as the
-    flat path (any doc-contiguous order is valid semantics)."""
+    factorize/argsort/take over the word rows. The list column flattens
+    zero-copy into per-word arrays; doc_id expands to a per-word column as
+    an object-pointer repeat (pointers to the ~n_docs shared strings, not
+    string copies). Chunking walks doc boundaries via the cumulative word
+    counts into ~_KERNEL_CHUNK_ROWS-word doc-aligned chunks."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -447,84 +338,25 @@ def _extract_iter_arrow_grouped(batches, configs: dict | None = None):
         d = e
 
 
-def _extract_iter(batches, configs: dict | None = None, with_fields_map: bool = False):
-    """mapInPandas kernel: one hash-partition of OCR words (all rows of a
-    doc land in the same partition; no within-partition order assumed).
-
-    Buffers the partition (bounded: ~n_rows/n_partitions, tune n_partitions
-    at scale), sorts by doc_id once in pandas, then processes doc-aligned
-    chunks near the cache-friendly sweet spot. Avoids a JVM-side
-    sortWithinPartitions, which cost more than the pandas sort and forced
-    tiny Arrow-batch kernel calls."""
-    chunks = [pdf for pdf in batches if len(pdf)]
-    if not chunks:
-        return
-    pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-    pdf = pdf.sort_values("doc_id", kind="mergesort", ignore_index=True)
-    ids = pdf["doc_id"].to_numpy()
-    n = len(pdf)
-    s = 0
-    while s < n:
-        e = min(s + _KERNEL_CHUNK_ROWS, n)
-        while e < n and ids[e] == ids[e - 1]:
-            e += 1
-        yield _extract_batch(pdf.iloc[s:e], configs, with_fields_map)
-        s = e
-
-
-def _word_projection(ocr_words: DataFrame) -> DataFrame:
-    """Project + flatten bboxes JVM-side (shared by both boundary shapes)."""
-    b = F.col("bbox")
-    return ocr_words.select(
-        "doc_id",
-        "page",
-        "line_id",
-        "word_id",
-        "text",
-        # flatten the clockwise 8-float bbox JVM-side: Arrow then ships
-        # plain float columns instead of per-row Python lists
-        F.least(b[0], b[6]).alias("x0"),
-        F.least(b[1], b[3]).alias("y0"),
-        F.greatest(b[2], b[4]).alias("x1"),
-        F.greatest(b[5], b[7]).alias("y1"),
-    )
-
-
-def _flat_words(ocr_words: DataFrame, n_partitions: int | None) -> DataFrame:
-    """Flat boundary shape (legacy/A-B path): one row per word, then
-    hash-repartition by doc_id so every document's words land in one
-    partition (grouped in the kernel).
-
-    Row-level doc_id hashing into P partitions balances within ~5-8%
-    (multinomial over ~10^3 docs/partition), unlike hashing coarse bucket
-    ids which left 1.5-6x stragglers; docs are bounded (<=~250 words) so
-    no single key can skew a partition."""
-    spark = ocr_words.sparkSession
-    if n_partitions is None:
-        # 4x shuffle parallelism: ~0.3-0.5s tasks overlap Python compute
-        # with JVM shuffle reads and smooth per-doc weight variance
-        n_partitions = 4 * int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return _word_projection(ocr_words).repartition(n_partitions, "doc_id")
-
-
 def _grouped_words(
     ocr_words: DataFrame,
     n_partitions: int | None,
     heavy_words: int | None = None,
     heavy_partitions: int | None = None,
 ) -> DataFrame:
-    """Grouped boundary shape (hot path): collect each document's words into
-    one array<struct> row BEFORE the Python boundary.
+    """Grouped boundary shape: project each word's bbox JVM-side, then
+    collect each document's words into one array<struct> row BEFORE the
+    Python boundary.
 
     Why: doc_id is a ~27-byte string repeated per word — 42% of all bytes
-    crossing the JVM<->Python Arrow IPC stream in the flat shape (measured
-    on the 100k bench corpus: 27.2 of 64.6 B/row). Grouping ships it once
-    per document and lets the map-side partial collect_list carry it once
-    per (doc, map partition) through the shuffle too. Pinned A/B of the
-    boundary alone at 8 cores: flat 7.0s -> grouped 2.44s (min-of-4).
+    crossing the JVM<->Python Arrow IPC stream in a one-row-per-word shape
+    (measured on the 100k bench corpus: 27.2 of 64.6 B/row). Grouping ships
+    it once per document and lets the map-side partial collect_list carry
+    it once per (doc, map partition) through the shuffle too. Pinned A/B
+    of the boundary alone at 8 cores: per-word 7.0s -> grouped 2.44s
+    (min-of-4).
 
-    The groupBy hashes on doc_id exactly like the flat path's repartition,
-    so skew properties are identical (per-doc cost bounded by
+    The groupBy hashes on doc_id, so per-doc cost bounds skew (hard cap
     MAX_DOC_WORDS). With n_partitions=None the agg uses
     spark.sql.shuffle.partitions and keeps the map-side partial aggregate;
     an explicit n_partitions pre-repartitions (the partial agg then
@@ -544,7 +376,20 @@ def _grouped_words(
     asserted by tests/test_skew_extraction.py); row values are
     untouched, so extraction output is bit-identical either way.
     """
-    flat = _word_projection(ocr_words)
+    b = F.col("bbox")
+    flat = ocr_words.select(
+        "doc_id",
+        "page",
+        "line_id",
+        "word_id",
+        "text",
+        # flatten the clockwise 8-float bbox JVM-side: Arrow then ships
+        # plain float columns instead of per-row Python lists
+        F.least(b[0], b[6]).alias("x0"),
+        F.least(b[1], b[3]).alias("y0"),
+        F.greatest(b[2], b[4]).alias("x1"),
+        F.greatest(b[5], b[7]).alias("y1"),
+    )
     if n_partitions is not None:
         flat = flat.repartition(n_partitions, "doc_id")
     grouped = flat.groupBy("doc_id").agg(
@@ -583,44 +428,15 @@ def recognize(
 
     Replaces the reference's external form-recognizer call
     (DocumentProcessor.cs:196-301) with local layout math. One shuffle
-    (hash on doc_id). `configs` (fmt -> extraction config, from the model
-    registry) rides to executors in the kernel closure.
-
-    Boundary shape: grouped (collect_list per doc) by default — 42% fewer
-    bytes across the Arrow IPC stream and a partial-agg-compressed shuffle;
-    set HORUS_SPARK_BOUNDARY=flat for the legacy one-row-per-word shape
-    (kept for A/B benches and as a fallback)."""
-    if _os.environ.get("HORUS_SPARK_BOUNDARY", "grouped") == "flat":
-
-        def kernel_flat(batches):
-            yield from _extract_iter_arrow(batches, configs)
-
-        return _flat_words(ocr_words, n_buckets).mapInArrow(
-            kernel_flat, schema=FIELDS_SCHEMA
-        )
+    (hash on doc_id, grouped per document by _grouped_words). `configs`
+    (fmt -> extraction config, from the model registry) rides to executors
+    in the kernel closure."""
 
     def kernel(batches):
         yield from _extract_iter_arrow_grouped(batches, configs)
 
     return _grouped_words(ocr_words, n_buckets, heavy_words).mapInArrow(
         kernel, schema=FIELDS_SCHEMA
-    )
-
-
-def recognize_with_fields_map(
-    ocr_words: DataFrame,
-    n_buckets: int | None = None,
-    configs: dict | None = None,
-) -> DataFrame:
-    """Test/debug variant also emitting the dynamic fields map. The flag
-    travels through the closure (a module global would be racy with Python
-    worker reuse across concurrent jobs)."""
-
-    def kernel(batches):
-        yield from _extract_iter(batches, configs, with_fields_map=True)
-
-    return _flat_words(ocr_words, n_buckets).mapInPandas(
-        kernel, schema=FIELDS_MAP_SCHEMA
     )
 
 

@@ -244,42 +244,89 @@ def test_multi_seed_span_and_field_parity(spark, seed, base):
         out.unpersist()
 
 
+def _kernel_rows(batches) -> dict:
+    """doc_id -> kernel output row (as a dict) minus the wall-clock timer."""
+    rows = {}
+    for b in batches:
+        for r in b.to_pylist():
+            r.pop("time_to_shred_ms")
+            rows[r["doc_id"]] = r
+    return rows
+
+
 def test_extract_batch_empty_input_matches_schema(spark):
-    """Review finding: the empty-input early return emitted a 3-column
-    stub that matched neither declared output schema; it must mirror
-    the non-empty shape exactly (with and without the fields map)."""
-    import pandas as pd
+    """The grouped kernel yields nothing for an empty input (no stub batch
+    to fail Arrow serialization), and every batch it does yield carries
+    the declared Arrow output schema, whose columns are FIELDS_SCHEMA's."""
+    from pyspark.sql.types import StructType
 
-    from horus_spark.fixtures.generator import corpus_pandas
-    from horus_spark.pipeline import _extract_batch
+    from horus_spark import pipeline as P
 
-    fixture = corpus_pandas(2)
-    words = fixture["ocr_words"]
-    for with_map in (False, True):
-        full = _extract_batch(words, with_fields_map=with_map)
-        empty = _extract_batch(words.iloc[0:0], with_fields_map=with_map)
-        assert list(empty.columns) == list(full.columns)
-        assert len(empty) == 0
+    schema = P._arrow_fields_schema()
+    assert schema.names == StructType.fromDDL(P.FIELDS_SCHEMA).names
+
+    grouped = P._grouped_words(corpus_spark(spark, 4, partitions=2)["ocr_words"], None)
+    batch = grouped.toArrow().combine_chunks().to_batches()[0]
+    out = list(P._extract_iter_arrow_grouped(iter([batch])))
+    assert sum(b.num_rows for b in out) == 4
+    assert all(b.schema == schema for b in out)
+    assert list(P._extract_iter_arrow_grouped(iter([batch.slice(0, 0)]))) == []
+    assert list(P._extract_iter_arrow_grouped(iter([]))) == []
 
 
-def test_boundary_shapes_agree(spark, monkeypatch):
-    """The grouped (collect_list per doc) and flat (row per word) Arrow
-    boundary shapes must produce identical recognizer output — the grouped
-    shape only changes HOW bytes cross the JVM<->Python stream, never what
-    the kernel computes. Differential over a fresh corpus, all columns
-    except the wall-clock timer."""
-    from horus_spark.pipeline import recognize
+def test_boundary_shapes_agree(spark):
+    """The Spark boundary (JVM bbox projection, grouped shuffle, Arrow IPC
+    both ways) never changes what the kernel computes: recognize() over
+    Spark equals _extract_batch_arrow run in-process on the same words in
+    (doc_id, page, line_id, word_id) order. All columns except the
+    wall-clock timer."""
+    from horus_spark.pipeline import _extract_batch_arrow, recognize
 
     c = corpus_spark(spark, 60, partitions=4)
     words = c["ocr_words"]
 
-    monkeypatch.setenv("HORUS_SPARK_BOUNDARY", "flat")
-    flat_rows = recognize(words).drop("time_to_shred_ms").sort("doc_id").collect()
-    monkeypatch.setenv("HORUS_SPARK_BOUNDARY", "grouped")
-    grouped_rows = recognize(words).drop("time_to_shred_ms").sort("doc_id").collect()
+    spark_rows = {
+        r.doc_id: r.asDict(recursive=True)
+        for r in recognize(words).drop("time_to_shred_ms").collect()
+    }
+    pdf = words.toPandas().sort_values(
+        ["doc_id", "page", "line_id", "word_id"], ignore_index=True
+    )
+    local_rows = _kernel_rows([_extract_batch_arrow(pdf)])
 
-    assert len(flat_rows) == len(grouped_rows) == 60
-    assert flat_rows == grouped_rows
+    assert len(spark_rows) == len(local_rows) == 60
+    assert spark_rows == local_rows
+
+
+def test_doc_word_cap_truncates_in_reading_order(monkeypatch):
+    """A doc over MAX_DOC_WORDS is cut to its first MAX_DOC_WORDS words in
+    (page, line_id, word_id) order however its words arrive; docs under
+    the cap in the same batch are unaffected."""
+    from horus_spark import pipeline as P
+
+    words = corpus_pandas(6)["ocr_words"]
+    cap = 100
+    sizes = words.groupby("doc_id").size()
+    over = list(sizes[sizes > cap].index)
+    under = list(sizes[sizes <= cap].index)
+    assert over and under  # the batch exercises both branches
+    shuffled = words.sample(frac=1.0, random_state=7).reset_index(drop=True)
+    uncapped = _kernel_rows([P._extract_batch_arrow(shuffled)])
+
+    monkeypatch.setattr(P, "MAX_DOC_WORDS", cap)
+    capped = _kernel_rows([P._extract_batch_arrow(shuffled)])
+
+    assert sorted(capped) == sorted(sizes.index)
+    for d in over:
+        head = (
+            words[words["doc_id"] == d]
+            .sort_values(["page", "line_id", "word_id"])
+            .head(cap)
+        )
+        assert capped[d] == _kernel_rows([P._extract_batch_arrow(head)])[d], d
+    assert any(capped[d] != uncapped[d] for d in over)  # the cap did bite
+    for d in under:
+        assert capped[d] == uncapped[d], d
 
 
 def test_grouped_kernel_chunking_doc_aligned(spark):

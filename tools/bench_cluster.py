@@ -216,14 +216,14 @@ def _child(topology: str, stage: str) -> None:
     words = spark.read.parquet(os.path.join(CORPUS, "ocr_words"))
     docs = spark.read.parquet(os.path.join(CORPUS, "documents"))
     if stage == "arrow_noop":
-        from horus_spark.pipeline import _flat_words
+        from horus_spark.pipeline import _grouped_words
 
-        flat = _flat_words(words, None)
+        grouped = _grouped_words(words, None)
 
         def ident(batches):
             yield from batches
 
-        df = flat.mapInArrow(ident, schema=flat.schema)
+        df = grouped.mapInArrow(ident, schema=grouped.schema)
     elif stage == "kernel":
         from horus_spark.pipeline import recognize
 

@@ -5,8 +5,12 @@ only ~0.45-0.50 from 8->32. This tool attributes the knee by benching the
 pipeline's two halves separately at pinned 8/16/32 cores, plus an Arrow
 kernel-chunk-size sweep at 32:
 
-- stage "kernel": scan -> repartition(doc_id) -> mapInArrow layout kernel
-  (Python compute + Arrow transfer) -> count. The Python/Arrow half.
+- stage "kernel": scan -> grouped shuffle (collect_list per doc_id) ->
+  mapInArrow layout kernel (Python compute + Arrow transfer) -> count.
+  The Python/Arrow half.
+- stage "shuffle": the kernel stage minus Python (JVM only).
+- stage "arrow_noop": the kernel stage with an identity mapInArrow in
+  place of the kernel (shuffle + Arrow boundary, zero per-doc compute).
 - stage "jvm": documents join PRE-STAGED recognizer output (parquet) ->
   thumbprint + span classification + shred expressions -> count. Pure
   JVM whole-stage codegen + one join shuffle; zero Python in the path
@@ -78,34 +82,22 @@ def _level_child(cores: int, stage: str) -> None:
 
         df = recognize(words)
     elif stage == "shuffle":
-        # the kernel stage MINUS Python: scan -> flatten -> repartition
+        # the kernel stage MINUS Python: scan -> project -> grouped
         # shuffle, counted post-exchange (JVM only)
-        from horus_spark.pipeline import _flat_words
+        from horus_spark.pipeline import _grouped_words
 
-        df = _flat_words(words, None)
+        df = _grouped_words(words, None)
     elif stage == "arrow_noop":
         # shuffle + Arrow boundary + Python workers, but ZERO per-doc
-        # compute: an identity mapInArrow over the same repartitioned input
-        from horus_spark.pipeline import _flat_words
-
-        flat = _flat_words(words, None)
-
-        def ident(batches):
-            yield from batches
-
-        df = flat.mapInArrow(ident, schema=flat.schema)
-    elif stage == "arrow_noop_grouped":
-        # same boundary no-op over the GROUPED shape (one array<struct> row
-        # per document): measures what the collect_list boundary actually
-        # ships through shuffle + Arrow IPC, minus all per-doc compute
+        # compute: an identity mapInArrow over the same grouped input
         from horus_spark.pipeline import _grouped_words
 
         grouped = _grouped_words(words, None)
 
-        def ident_g(batches):
+        def ident(batches):
             yield from batches
 
-        df = grouped.mapInArrow(ident_g, schema=grouped.schema)
+        df = grouped.mapInArrow(ident, schema=grouped.schema)
     elif stage == "jvm":
         from horus_spark.pipeline import run_extraction
 
