@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 
 from horus_spark import constants as C
 from horus_spark import errors as E
+from horus_spark.exprmemo import session_memo
 
 # C#-Decimal.TryParse-compatible numeric shape after space stripping;
 # allows thousands commas (stripped before cast).
@@ -198,14 +199,17 @@ def date_error(raw: Column, key: Column, severity: str) -> Column:
 # ------------------------------------------------------------------ core
 
 
-def _shred_from_raw(
-    df: DataFrame,
+def _shred_exprs(
     header: Column,
     lines_raw: Column,
-    carry: list[str],
+    cols: tuple[str, ...],
+    carry: tuple[str, ...],
     engine=None,
-) -> DataFrame:
-    """Shared shredding logic over raw header struct + raw line array.
+) -> tuple[Column, list[Column]]:
+    """Shared shredding logic over raw header struct + raw line array, as
+    (all_errors_expr, select_cols) for an input with columns `cols`; apply
+    with _apply_shred. No DataFrame is touched, so the result can be reused
+    for any input with the same columns (see shred_fast).
     `engine` (engines.EngineSpec) selects which field channels exist —
     the reference's pluggable IProcessingEngine surface. Channels an
     engine omits keep their C# default values (0 / null) and emit no
@@ -213,7 +217,6 @@ def _shred_from_raw(
     from horus_spark.engines import HORUS_ENGINE
 
     engine = engine or HORUS_ENGINE
-    cols = df.columns
 
     def k(name: str) -> Column:
         return F.lit(name)
@@ -309,18 +312,13 @@ def _shred_from_raw(
         F.concat(header_errors, F.flatten(F.transform(lines_raw, line_errors))),
         lambda e: e.isNotNull(),
     )
-    # Stage the error array in its own projection: higher-order functions are
-    # CodegenFallback (interpreted), and inlining this tree into the errors
-    # column AND both counts would evaluate it three times per row.
-    # CollapseProject keeps the split because the alias is non-cheap and
-    # referenced more than once.
-    df = df.withColumn("__all_errors", all_errors_expr)
+    # staged as __all_errors by _apply_shred
     all_errors = F.col("__all_errors")
 
     terminal_count = F.size(F.filter(all_errors, lambda e: e["severity"] == E.SEV_TERMINAL))
     warning_count = F.size(F.filter(all_errors, lambda e: e["severity"] == E.SEV_WARNING))
 
-    return df.select(
+    return all_errors_expr, [
         F.col("doc_id"),
         (F.col("file_name") if "file_name" in cols else F.col("doc_id")).alias("file_name"),
         document_number.alias("document_number"),
@@ -383,7 +381,17 @@ def _shred_from_raw(
             else F.lit(None).cast("string")
         ).alias("unique_run_identifier"),
         *[F.col(c) for c in carry],
-    )
+    ]
+
+
+def _apply_shred(df: DataFrame, exprs: tuple[Column, list[Column]]) -> DataFrame:
+    all_errors_expr, select_cols = exprs
+    # Stage the error array in its own projection: higher-order functions are
+    # CodegenFallback (interpreted), and inlining this tree into the errors
+    # column AND both counts would evaluate it three times per row.
+    # CollapseProject keeps the split because the alias is non-cheap and
+    # referenced more than once.
+    return df.withColumn("__all_errors", all_errors_expr).select(*select_cols)
 
 
 def shred_fast(df: DataFrame, carry: list[str] | None = None, engine=None) -> DataFrame:
@@ -393,13 +401,18 @@ def shred_fast(df: DataFrame, carry: list[str] | None = None, engine=None) -> Da
                        post_code : string> (NULL field = element missing)
     lines_raw:  array<struct<drug,qty,unit,vat,disc,taxable,net : string>>
                 (already prefix-terminated, max 49 entries).
-    engine: engines.EngineSpec or name ('horus' default)."""
-    from horus_spark.engines import get_engine
+    engine: engines.EngineSpec or name ('horus' default).
+    The expressions are built once per SparkContext for each (engine,
+    input columns, carry) and reused by later calls."""
+    from horus_spark.engines import HORUS_ENGINE, get_engine
 
-    spec = get_engine(engine) if engine is not None else None
-    return _shred_from_raw(
-        df, F.col("header_raw"), F.col("lines_raw"), carry or [], spec
+    spec = get_engine(engine) if engine is not None else HORUS_ENGINE
+    cols, carry_t = tuple(df.columns), tuple(carry or ())
+    exprs = session_memo(
+        ("shred_fast", spec, cols, carry_t),
+        lambda: _shred_exprs(F.col("header_raw"), F.col("lines_raw"), cols, carry_t, spec),
     )
+    return _apply_shred(df, exprs)
 
 
 def raw_from_fields_exprs() -> tuple[Column, Column]:
@@ -482,6 +495,7 @@ def shred(
     spec = get_engine(engine) if engine is not None else None
     header_raw, lines_raw = raw_from_fields_exprs()
     staged = df.withColumn("__header_raw", header_raw).withColumn("__lines_raw", lines_raw)
-    return _shred_from_raw(
-        staged, F.col("__header_raw"), F.col("__lines_raw"), carry or [], spec
+    exprs = _shred_exprs(
+        F.col("__header_raw"), F.col("__lines_raw"), tuple(staged.columns), tuple(carry or ()), spec
     )
+    return _apply_shred(staged, exprs)

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from horus_spark.config import format_of_doc_id
+from horus_spark.exprmemo import session_memo
 from horus_spark.operators.boilerplate import is_boilerplate_text
 from horus_spark.operators.fields import extract_fields_arrays
 from horus_spark.operators.layout import cluster_lines, fragments_view, infer_grid_arrays
@@ -496,6 +497,28 @@ def thumbprint_expr() -> "F.Column":
     return F.regexp_replace(F.upper(plain), "(..)(?!$)", "$1 ")
 
 
+def _join_exprs() -> dict[str, "F.Column"]:
+    """The data-independent columns run_extraction adds to the
+    documents x recognizer join (memoized per session by the caller)."""
+    empty_header = F.struct(
+        *[F.lit(None).cast("string").alias(c) for c, _ in _HEADER_KEYS]
+    )
+    return {
+        "header_raw": F.coalesce(F.col("header_raw"), empty_header),
+        "lines_raw": F.coalesce(F.col("lines_raw"), F.array().cast(_LINES_T)),
+        # a document the recognizer produced nothing for (no OCR rows at
+        # all) carries an explicit status, like the reference's
+        # RecognizerStatus on a doc the service returned no result for
+        "recognizer_status": F.coalesce(F.col("recognizer_status"), F.lit("notfound")),
+        "recognizer_errors": F.coalesce(
+            F.col("recognizer_errors"), F.array().cast("array<string>")
+        ),
+        "time_to_shred_ms": F.coalesce(F.col("time_to_shred_ms"), F.lit(0.0)),
+        "thumbprint": thumbprint_expr(),
+        "spans_out": classify_spans_expr(),
+    }
+
+
 def run_extraction(
     documents: DataFrame,
     ocr_words: DataFrame,
@@ -541,41 +564,19 @@ def run_extraction(
         )
     if fields_df is None:
         fields_df = recognize(ocr_words, n_buckets, configs, heavy_words)
-    empty_header = F.struct(
-        *[F.lit(None).cast("string").alias(c) for c, _ in _HEADER_KEYS]
-    )
     if run_id is None:
         import uuid
 
         run_id = str(uuid.uuid4())  # the reference's UniqueRunIdentifier
-    joined = (
-        documents.join(fields_df, "doc_id", "left")
-        .withColumn("header_raw", F.coalesce(F.col("header_raw"), empty_header))
-        .withColumn(
-            "lines_raw", F.coalesce(F.col("lines_raw"), F.array().cast(_LINES_T))
-        )
-        # a document the recognizer produced nothing for (no OCR rows at
-        # all) carries an explicit status, like the reference's
-        # RecognizerStatus on a doc the service returned no result for
-        .withColumn(
-            "recognizer_status",
-            F.coalesce(F.col("recognizer_status"), F.lit("notfound")),
-        )
-        .withColumn(
-            "recognizer_errors",
-            F.coalesce(F.col("recognizer_errors"), F.array().cast("array<string>")),
-        )
-        .withColumn(
-            "time_to_shred_ms",
-            F.coalesce(F.col("time_to_shred_ms"), F.lit(0.0)),
-        )
-        .withColumn("thumbprint", thumbprint_expr())
-        .withColumn("spans_out", classify_spans_expr())
-        # run stamps, persisted on the header row exactly like the
-        # reference (HorusSql.cs:244-249); current_timestamp() is
-        # query-constant in Spark, so one job = one shredding timestamp
-        .withColumn("shredding_utc_datetime", F.current_timestamp())
-        .withColumn("unique_run_identifier", F.lit(run_id))
+    joined = documents.join(fields_df, "doc_id", "left").withColumns(
+        {
+            **session_memo("run_extraction.join", _join_exprs),
+            # run stamps, persisted on the header row exactly like the
+            # reference (HorusSql.cs:244-249); current_timestamp() is
+            # query-constant in Spark, so one job = one shredding timestamp
+            "shredding_utc_datetime": F.current_timestamp(),
+            "unique_run_identifier": F.lit(run_id),
+        }
     )
     if model_dim is not None:
         joined = (

@@ -351,3 +351,185 @@ def test_grouped_kernel_chunking_doc_aligned(spark):
     ids = [i for b in out for i in b.column(0).to_pylist()]
     assert sorted(ids) == sorted(grouped.column("doc_id").to_pylist())
     assert len(ids) == len(set(ids)) == 25
+
+
+# ------------------------------------------------- per-session expression memo
+
+_RUN_STAMPS = ["shredding_utc_datetime", "unique_run_identifier", "time_to_shred_ms"]
+
+
+def _rows_by_doc(df) -> dict:
+    return {r.doc_id: r.asDict(recursive=True) for r in df.drop(*_RUN_STAMPS).collect()}
+
+
+def _spy_shred_builder(monkeypatch) -> list:
+    """Count calls of the shred expression builder (shred_fast reaches it
+    by global lookup, so patching the module attribute sees every build)."""
+    from horus_spark.operators import shred as S
+
+    calls = []
+    real = S._shred_exprs
+
+    def spy(*a, **kw):
+        calls.append(1)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(S, "_shred_exprs", spy)
+    return calls
+
+
+def test_memoized_build_matches_cold_build(spark, monkeypatch):
+    """Calls after the first reuse the session's expression trees (one
+    shred build per engine), and the output of each call equals a cold
+    build (memo cleared) on the same input: every column except the
+    per-run stamps and the timer."""
+    from horus_spark import exprmemo
+
+    c = corpus_spark(spark, 24, partitions=2)
+    docs, words = c["documents"], c["ocr_words"]
+    ids = sorted(r.doc_id for r in docs.select("doc_id").collect())
+    subsets = [ids[::2], ids[1::2]]
+    engines = ["horus", "samplecustomer"]
+
+    def run(subset, engine):
+        return _rows_by_doc(
+            run_extraction(
+                docs.filter(F.col("doc_id").isin(subset)),
+                words.filter(F.col("doc_id").isin(subset)),
+                engine=engine,
+            )
+        )
+
+    monkeypatch.setattr(exprmemo, "_slot", None)
+    calls = _spy_shred_builder(monkeypatch)
+    warm = {(e, i): run(s, e) for e in engines for i, s in enumerate(subsets)}
+    assert len(calls) == len(engines)
+    for (engine, i), got in warm.items():
+        exprmemo._slot = None
+        cold = run(subsets[i], engine)
+        assert sorted(got) == sorted(cold) == sorted(subsets[i])
+        assert got == cold, (engine, i)
+    # the engines shred differently, so a memo keyed without the engine
+    # would hand one engine's trees to the other
+    assert warm[("horus", 0)] != warm[("samplecustomer", 0)]
+
+
+def test_session_memo_resets_on_context_change(spark, monkeypatch):
+    """A new active SparkContext empties the memo: nothing built under the
+    previous context is handed out or kept."""
+    from pyspark import SparkContext
+
+    from horus_spark import exprmemo
+
+    monkeypatch.setattr(exprmemo, "_slot", None)
+    builds = []
+
+    def build(tag):
+        def b():
+            builds.append(tag)
+            return object()
+
+        return b
+
+    first = exprmemo.session_memo("a", build("a"))
+    assert exprmemo.session_memo("a", build("a")) is first
+    assert builds == ["a"]
+
+    sentinel = object()
+    monkeypatch.setattr(SparkContext, "_active_spark_context", sentinel)
+    b = exprmemo.session_memo("b", build("b"))
+    assert exprmemo._slot[0] is sentinel
+    assert list(exprmemo._slot[1]) == ["b"]
+    assert exprmemo._slot[1]["b"] is b
+    assert exprmemo.session_memo("a", build("a")) is not first
+    assert builds == ["a", "b", "a"]
+    assert sorted(exprmemo._slot[1]) == ["a", "b"]
+
+
+def test_warm_build_py4j_budget(spark, monkeypatch):
+    """A warm run_extraction build (no action) makes at most a fifth of
+    the py4j round trips of a cold one: the shred, classify and
+    thumbprint trees are not rebuilt per call. The releases py4j sends
+    for garbage-collected JVM references are not counted: when they go
+    out depends on the interpreter's GC, not on the build."""
+    import gc
+
+    from py4j import protocol
+
+    from horus_spark import exprmemo
+
+    c = corpus_spark(spark, 8, partitions=2)
+    docs, words = c["documents"], c["ocr_words"]
+    docs.columns, words.columns  # analyse the inputs outside the count
+    client = spark.sparkContext._gateway._gateway_client
+    real = client.send_command
+    sent = []
+
+    def counted(command, *a, **kw):
+        if not command.startswith(protocol.MEMORY_COMMAND_NAME):
+            sent.append(1)
+        return real(command, *a, **kw)
+
+    def build_calls() -> int:
+        gc.collect()
+        sent.clear()
+        run_extraction(docs, words)
+        return len(sent)
+
+    monkeypatch.setattr(exprmemo, "_slot", None)
+    monkeypatch.setattr(client, "send_command", counted)
+    cold = build_calls()
+    warm = build_calls()
+    assert warm * 5 <= cold, (warm, cold)
+
+
+def test_run_checkpointed_builds_shred_once(spark, monkeypatch, tmp_path):
+    """Each checkpointed chunk calls run_extraction; the shred expression
+    trees are built for the first chunk only."""
+    from horus_spark import exprmemo
+    from horus_spark.sources.sink import run_checkpointed
+
+    c = corpus_spark(spark, 12, partitions=2)
+    monkeypatch.setattr(exprmemo, "_slot", None)
+    calls = _spy_shred_builder(monkeypatch)
+    res = run_checkpointed(c["documents"], c["ocr_words"], str(tmp_path / "out"), n_chunks=3)
+    assert len(res["completed"]) == 3
+    assert len(calls) == 1
+
+
+def test_session_memo_concurrent_misses_share_one_value(monkeypatch):
+    """Threads missing the same key at once (streaming micro-batches call
+    in from py4j threads) all get the value that was stored first."""
+    import sys
+    import threading
+    import time
+
+    from pyspark import SparkContext
+
+    from horus_spark import exprmemo
+
+    monkeypatch.setattr(exprmemo, "_slot", None)
+    monkeypatch.setattr(SparkContext, "_active_spark_context", object())
+    got = []
+
+    def build():
+        time.sleep(0.001)
+        return object()
+
+    def worker():
+        for i in range(50):
+            got.append((i, exprmemo.session_memo(i, build)))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker) for _ in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(old)
+    assert len(got) == 16 * 50
+    assert all(v is exprmemo._slot[1][i] for i, v in got)
